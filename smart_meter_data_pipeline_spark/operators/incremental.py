@@ -26,12 +26,19 @@ Write path: ``spark.sql.sources.partitionOverwriteMode=dynamic`` —
 mode("overwrite") then only the partitions present in the written
 frame are replaced; untouched mart dates keep their files byte-for-
 byte. (On Delta/Iceberg the same function becomes ``replaceWhere`` /
-``overwritePartitions``.)
+``overwritePartitions``.) The two mart writes are the refresh's only
+Spark work: the fact dates that decide the LAG successor come from a
+listing of the ``reading_date=`` dirs, and the returned row counts are
+summed from the parquet footers of the rewritten ``billing_date=`` /
+``load_date=`` partitions — after a dynamic overwrite those files hold
+exactly the rows just written — so no scan or count job runs for
+bookkeeping. A date with no fact rows writes nothing and counts 0.
 """
 
 from __future__ import annotations
 
 import datetime as dt
+import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -41,6 +48,7 @@ from smart_meter_data_pipeline_spark.operators.meter_pipeline import (
     fact_grid_load_hourly,
     stg_transform,
 )
+from smart_meter_data_pipeline_spark.sources.ingest import data_files, footer_rows
 
 
 def _with_overlap(dates: list[dt.date]) -> list[dt.date]:
@@ -61,16 +69,24 @@ def _rebuild_targets(
     return sorted(ds)
 
 
-def _existing_fact_dates(spark: SparkSession, fact_dir: str) -> set[dt.date]:
-    """Distinct partition dates — a partition-column-only scan, served
-    from the file listing without reading any row data."""
+def _existing_fact_dates(fact_dir: str) -> set[dt.date]:
+    """Dates of the ``reading_date=`` partitions that hold at least one
+    data file — read from a directory listing, no Spark job."""
     return {
-        r["reading_date"]
-        for r in spark.read.parquet(fact_dir)
-        .select("reading_date")
-        .distinct()
-        .collect()
+        dt.date.fromisoformat(name.split("=", 1)[1])
+        for name in os.listdir(fact_dir)
+        if name.startswith("reading_date=")
+        and data_files([os.path.join(fact_dir, name)])
     }
+
+
+def _partition_rows(table_dir: str, column: str, dates: list[dt.date]) -> int:
+    """Rows in the ``column=`` partitions for ``dates``, summed from
+    parquet footers — what a filtered ``count()`` returns, without the
+    scan job."""
+    return footer_rows(
+        data_files([os.path.join(table_dir, f"{column}={d}") for d in dates])
+    )
 
 
 def stg_for_dates(
@@ -104,7 +120,7 @@ def refresh_marts_incremental(
     prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
     spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     try:
-        targets = _rebuild_targets(dates, _existing_fact_dates(spark, fact_dir))
+        targets = _rebuild_targets(dates, _existing_fact_dates(fact_dir))
         stg = stg_for_dates(spark, fact_dir, targets)
         billing = fact_customer_billing_daily(
             stg, dim_meters, dim_customers, dim_tariff_rates
@@ -118,13 +134,11 @@ def refresh_marts_incremental(
             "load_date", F.to_date("load_hour")
         )
         grid.write.mode("overwrite").partitionBy("load_date").parquet(grid_dir)
+        # Dynamic overwrite leaves exactly the rows just written in the
+        # rewritten partitions: count them from the footers.
         return {
-            "billing_rows": spark.read.parquet(billing_dir)
-            .filter(F.col("billing_date").isin(targets))
-            .count(),
-            "grid_rows": spark.read.parquet(grid_dir)
-            .filter(F.col("load_date").isin(targets))
-            .count(),
+            "billing_rows": _partition_rows(billing_dir, "billing_date", targets),
+            "grid_rows": _partition_rows(grid_dir, "load_date", targets),
         }
     finally:
         spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)

@@ -147,12 +147,22 @@ def idempotent_append(spark: SparkSession, batch: DataFrame, target: str) -> int
     ``INSERT ... ON CONFLICT (reading_timestamp, meter_id) DO NOTHING``.
 
     1. in-batch dedup on the PK,
-    2. anti-join against existing keys *from overlapping date
+    2. anti-join against existing keys *from the batch's date
        partitions only* (the target is partitioned by ``reading_date``,
        mirroring the reference's 1-day hypertable chunks,
-       01_create_schema.sql:98-101 — the key scan prunes to the
-       batch's dates),
-    3. append, partitioned by date.
+       01_create_schema.sql:98-101 — the key scan reads just the
+       batch's date dirs, never a listing of the whole table),
+    3. append, rebalanced on ``reading_date``: one file per date
+       partition per batch (AQE still splits a date larger than
+       ``advisoryPartitionSizeInBytes``).
+
+    Two Spark actions per batch (7–8 jobs under AQE for a 20k-row tick,
+    down from 12–13): the distinct-dates collect, which also materializes
+    the persisted batch before the lock, and the write, inside which the
+    anti-join runs exactly once. Nothing is counted by a Spark job: the
+    rows written are the footer ``num_rows`` of the files the write
+    added under the batch's date dirs. An empty batch returns 0 without
+    taking the lock.
 
     Returns the number of rows written.
 
@@ -160,48 +170,78 @@ def idempotent_append(spark: SparkSession, batch: DataFrame, target: str) -> int
     exclusive :func:`~..sources.txn.table_lock`, serializing writers the
     way the reference's PRIMARY KEY serializes conflicting INSERTs — two
     concurrent callers with overlapping batches land exactly one copy
-    (the second's anti-join sees the first's committed rows). Production
-    note: on Delta/Iceberg this whole function is ``MERGE ... WHEN NOT
-    MATCHED THEN INSERT`` with the same partition-pruning predicate, and
-    the table format's log replaces the filesystem lock. For object
-    stores, where no filesystem mutex exists, use
+    (the second's anti-join sees the first's committed rows). The lock
+    is also what makes the files added to the date dirs during the
+    write exactly this batch's files. Production note: on Delta/Iceberg
+    this whole function is ``MERGE ... WHEN NOT MATCHED THEN INSERT``
+    with the same partition-pruning predicate, and the table format's
+    log replaces the filesystem lock. For object stores, where no
+    filesystem mutex exists, use
     :func:`~..sources.manifest.idempotent_append_manifest` — the same
     guarantee through an optimistic commit log instead of a lock.
     """
     from smart_meter_data_pipeline_spark.sources.txn import table_lock
 
     pk = ["reading_timestamp", "meter_id"]
-    # Persist: the batch is consumed up to three times (dates scan,
-    # count, write) — without this every action would re-read the
-    # source (and inflate streaming numInputRows metrics). Persisting
-    # BEFORE taking the lock keeps source-read time out of the critical
+    # Persist: the batch is consumed twice (dates collect, write) —
+    # without this the write would re-read the source (and inflate
+    # streaming numInputRows metrics). The collect materializes it
+    # BEFORE the lock, keeping source-read time out of the critical
     # section.
     in_batch = batch.dropDuplicates(pk).persist()
     try:
-        in_batch.count()  # materialize outside the lock
+        # reading_date is never NULL: it is derived from the validated
+        # (non-NULL) reading_timestamp.
+        part_dirs = [
+            os.path.join(target, f"reading_date={r['reading_date']}")
+            for r in in_batch.select("reading_date").distinct().collect()
+        ]
+        if not part_dirs:
+            return 0
         with table_lock(target):
+            before = data_files(part_dirs)
             fresh = in_batch
-            if any(
-                name.startswith("reading_date=") for name in os.listdir(target)
-            ):
-                dates = [
-                    r["reading_date"]
-                    for r in in_batch.select("reading_date").distinct().collect()
-                ]
+            if before:
+                # The batch's own PK schema: no schema-inference job.
                 existing = (
-                    spark.read.parquet(target)
-                    .filter(F.col("reading_date").isin(dates))
+                    spark.read.schema(in_batch.select(*pk).schema)
+                    .option("basePath", target)
+                    .parquet(*sorted({os.path.dirname(f) for f in before}))
                     .select(*pk)
                 )
                 fresh = in_batch.join(existing, pk, "left_anti")
-            n = fresh.count()
-            if n:
-                fresh.write.mode("append").partitionBy("reading_date").parquet(
-                    target
-                )
-        return n
+            (
+                fresh.hint("rebalance", "reading_date")
+                .write.mode("append")
+                .partitionBy("reading_date")
+                .parquet(target)
+            )
+            added = data_files(part_dirs) - before
+        return footer_rows(added)
     finally:
         in_batch.unpersist()
+
+
+def data_files(dirs: list[str]) -> set[str]:
+    """The data files directly under ``dirs`` (a missing dir has none).
+    Names starting with ``_`` or ``.`` (``_SUCCESS``, checksums, the
+    lock file, ``_temporary/``) are skipped, as Spark's file listing
+    skips them."""
+    return {
+        e.path
+        for d in dirs
+        if os.path.isdir(d)
+        for e in os.scandir(d)
+        if e.is_file() and not e.name.startswith(("_", "."))
+    }
+
+
+def footer_rows(files) -> int:
+    """Σ parquet-footer ``num_rows`` over ``files`` — a row count of a
+    known file set without a Spark job."""
+    import pyarrow.parquet as pq
+
+    return sum(pq.read_metadata(f).num_rows for f in files)
 
 
 def ingest_batch(

@@ -1130,12 +1130,9 @@ class ManifestTable:
         known file list. Exact: the footer row count is authoritative
         for an immutable file. Used where a count action would re-scan
         data purely for bookkeeping (r14, guide §1.2)."""
-        import pyarrow.parquet as pq
+        from smart_meter_data_pipeline_spark.sources.ingest import footer_rows
 
-        return sum(
-            pq.read_metadata(os.path.join(self.data_dir, f)).num_rows
-            for f in rel_files
-        )
+        return footer_rows(os.path.join(self.data_dir, f) for f in rel_files)
 
     def _recorded_rows(
         self, commits: list[dict], rel_files: list[str]
@@ -1599,6 +1596,9 @@ class ManifestTable:
         failure routes into revalidation below."""
         self._check_constraints(batch)
         in_batch = batch.dropDuplicates(pk).persist()
+        # ``fresh`` (the persisted anti-join result, or in_batch itself)
+        # is unpersisted by the finally on every exit.
+        fresh = in_batch
         try:
             # Dateless tables (dimensions — no reading_timestamp):
             # None disables date pruning, so validation anti-joins
@@ -1637,6 +1637,7 @@ class ManifestTable:
                     self._discard_stage(staged)
                     return 0
                 if not staged:
+                    out = fresh
                     if cluster_by:
                         # write-time clustering (round 12): the
                         # dedup/anti-join shuffles hash-partition the
@@ -1648,7 +1649,7 @@ class ManifestTable:
                         # OPTIMIZE (cluster_by=...) that costs one
                         # extra batch-sized shuffle instead of a
                         # table-sized rewrite later.
-                        fresh = fresh.repartitionByRange(
+                        out = fresh.repartitionByRange(
                             *(
                                 [cluster_partitions]
                                 if cluster_partitions
@@ -1656,8 +1657,7 @@ class ManifestTable:
                             ),
                             *cluster_by,
                         ).sortWithinPartitions(*cluster_by)
-                    fresh = fresh.persist()
-                    staged = self._stage(fresh)
+                    staged = self._stage(out)
                 if self._pre_publish_hook is not None:
                     self._pre_publish_hook()
                 payload = json.dumps(
@@ -1673,7 +1673,6 @@ class ManifestTable:
                     }
                 ).encode()
                 if _put_if_absent(self._commit_path(validated_through), payload):
-                    fresh.unpersist()
                     return n
                 # Lost the race: validate only against the commits we
                 # lost to. If their key sets can't overlap ours (date
@@ -1714,6 +1713,7 @@ class ManifestTable:
                 f"{self.table_dir}"
             )
         finally:
+            fresh.unpersist()
             in_batch.unpersist()
 
     def _check_schema_compat(
@@ -2541,7 +2541,9 @@ class ManifestTable:
                 files,
                 self._evolved_schema([c for _, c in numbered]),
             ).select(*pk)
-            fresh = in_batch.join(existing, pk, "left_anti")
+            # Persisted before the count: the staging write reads the
+            # cached rows instead of re-running the join.
+            fresh = in_batch.join(existing, pk, "left_anti").persist()
         return fresh, fresh.count()
 
 
@@ -3032,10 +3034,12 @@ def apply_tombstones(
             # semi-join and the survivor anti-join — and is reused
             # across origin groups — where before every consumer
             # re-read the key parquet from scratch.
-            tkeys = [
-                table._tombstone_keys(spark, t).persist() for t in pending
-            ]
+            # Appended one at a time inside the try, so a failure
+            # partway through still unpersists the frames built so far.
+            tkeys = []
             try:
+                for t in pending:
+                    tkeys.append(table._tombstone_keys(spark, t).persist())
                 for i, grp in sorted(groups.items()):
                     tombs = pending[i:]
                     # File skipping: keep a file only if its recorded

@@ -11,6 +11,7 @@ import os
 from pyspark.sql import functions as F
 
 from smart_meter_data_pipeline_spark.operators.incremental import (
+    _existing_fact_dates,
     refresh_marts_incremental,
 )
 from smart_meter_data_pipeline_spark.operators.meter_pipeline import (
@@ -170,3 +171,83 @@ def test_backfill_invalidates_successor_day(spark, tmp_path):
     inc_grid = spark.read.parquet(grid_dir).select(*full_grid.columns)
     assert inc_grid.exceptAll(full_grid).count() == 0
     assert full_grid.exceptAll(inc_grid).count() == 0
+
+
+def _small_fact(spark, tmp_path, n_meters=5, days=2):
+    readings = gen_meter_readings(spark, n_meters=n_meters, n_ticks=96 * days)
+    fact_dir = str(tmp_path / "fact")
+    (
+        readings.withColumn("reading_date", F.to_date("reading_timestamp"))
+        .write.partitionBy("reading_date")
+        .parquet(fact_dir)
+    )
+    dims = dict(
+        dim_meters=gen_dim_meters(spark, n_meters),
+        dim_customers=gen_dim_customers(spark, n_meters),
+        dim_tariff_rates=gen_dim_tariff_rates(spark),
+        dim_grid_zones=gen_dim_grid_zones(spark),
+    )
+    return fact_dir, dims
+
+
+def test_existing_fact_dates_matches_distinct_scan(spark, tmp_path):
+    """The listing-based date set equals a distinct scan of the
+    partition column, with the sink's lock file, ``_SUCCESS``, an
+    empty ``_temporary/`` dir and a date dir holding no data file
+    beside the partitions."""
+    from smart_meter_data_pipeline_spark.sources.txn import table_lock
+
+    fact_dir, _ = _small_fact(spark, tmp_path, n_meters=2)
+    with table_lock(fact_dir):
+        pass
+    os.makedirs(os.path.join(fact_dir, "_temporary"))
+    empty_date = os.path.join(fact_dir, "reading_date=2030-01-01")
+    os.makedirs(empty_date)
+    open(os.path.join(empty_date, "_SUCCESS"), "w").close()
+    assert {"_lock.file", "_SUCCESS", "_temporary"} <= set(os.listdir(fact_dir))
+    scanned = {
+        r["reading_date"]
+        for r in spark.read.parquet(fact_dir)
+        .select("reading_date")
+        .distinct()
+        .collect()
+    }
+    assert len(scanned) == 2
+    assert _existing_fact_dates(fact_dir) == scanned
+
+
+def test_refresh_counts_equal_spark_count(spark, tmp_path):
+    """The footer-summed counts equal a Spark count of the rewritten
+    partitions (the changed date plus its LAG successor)."""
+    fact_dir, dims = _small_fact(spark, tmp_path)
+    billing_dir, grid_dir = str(tmp_path / "billing"), str(tmp_path / "grid")
+    first = dt.date(2024, 1, 1)
+    days = [first, first + dt.timedelta(days=1)]
+    assert _existing_fact_dates(fact_dir) == set(days)
+    out = refresh_marts_incremental(
+        spark, fact_dir, billing_dir, grid_dir, [first], **dims
+    )
+    assert out == {
+        "billing_rows": spark.read.parquet(billing_dir)
+        .filter(F.col("billing_date").isin(days))
+        .count(),
+        "grid_rows": spark.read.parquet(grid_dir)
+        .filter(F.col("load_date").isin(days))
+        .count(),
+    }
+    assert out["billing_rows"] > 0 and out["grid_rows"] > 0
+
+
+def test_refresh_date_without_facts_is_empty(spark, tmp_path):
+    """Refreshing a date that has no fact rows rewrites nothing and
+    returns zero counts instead of failing on an empty mart dir."""
+    fact_dir, dims = _small_fact(spark, tmp_path, n_meters=2, days=1)
+    out = refresh_marts_incremental(
+        spark,
+        fact_dir,
+        str(tmp_path / "billing"),
+        str(tmp_path / "grid"),
+        [dt.date(2030, 6, 1)],
+        **dims,
+    )
+    assert out == {"billing_rows": 0, "grid_rows": 0}

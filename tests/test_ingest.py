@@ -75,7 +75,6 @@ def test_check_constraint_violations(spark):
     assert reasons == ["bad_status", "negative_reading", "no_reading"]
 
 
-@pytest.mark.slow
 def test_redelivery_idempotent(spark, tmp_target):
     """Writing the same batch twice (and overlapping supersets) leaves
     exactly one copy of each PK — the ON CONFLICT DO NOTHING contract."""
@@ -90,6 +89,60 @@ def test_redelivery_idempotent(spark, tmp_target):
     fact = spark.read.parquet(tmp_target)
     assert fact.count() == 8
     assert fact.select("reading_timestamp", "meter_id").distinct().count() == 8
+
+
+def _parquet_files(target):
+    import os
+
+    return sorted(
+        os.path.join(d, f)
+        for d, _, fs in os.walk(target)
+        for f in fs
+        if f.endswith(".parquet")
+    )
+
+
+def _valid(spark, payloads):
+    valid, _ = ingest.split_valid(ingest.classify(_messages_df(spark, payloads)))
+    return valid
+
+
+def test_flock_replay_adds_no_file(spark, tmp_target):
+    """Replaying an already-landed batch writes 0 rows and leaves the
+    table's files exactly as they were."""
+    msgs = [json.dumps(dict(GOOD, meter_id=i)) for i in range(1, 21)]
+    assert ingest.idempotent_append(spark, _valid(spark, msgs), tmp_target) == 20
+    files = _parquet_files(tmp_target)
+    assert ingest.idempotent_append(spark, _valid(spark, msgs), tmp_target) == 0
+    assert _parquet_files(tmp_target) == files
+
+
+def test_flock_append_one_file_per_date(spark, tmp_target):
+    """A small batch spanning two dates lands as exactly one parquet
+    file per date partition, and the returned count is the rows
+    landed."""
+    import os
+
+    msgs = [
+        json.dumps(dict(GOOD, meter_id=i, reading_timestamp=ts))
+        for i in range(1, 41)
+        for ts in ("2024-01-01T23:45:00", "2024-01-02T00:00:00")
+    ]
+    assert ingest.idempotent_append(spark, _valid(spark, msgs), tmp_target) == 80
+    per_date = {}
+    for f in _parquet_files(tmp_target):
+        d = os.path.basename(os.path.dirname(f))
+        per_date[d] = per_date.get(d, 0) + 1
+    assert per_date == {"reading_date=2024-01-01": 1, "reading_date=2024-01-02": 1}
+    assert spark.read.parquet(tmp_target).count() == 80
+
+
+def test_flock_empty_batch_writes_nothing(spark, tmp_target):
+    """An empty batch returns 0 without creating the table."""
+    import os
+
+    assert ingest.idempotent_append(spark, _valid(spark, ["{bad"]), tmp_target) == 0
+    assert not os.path.exists(tmp_target)
 
 
 def test_in_batch_duplicates_deduped(spark, tmp_target):

@@ -4,9 +4,9 @@ local replica of the driver's t2 correctness gate.
 r15 (VERDICT r14 #2): the full 400+-query sweep takes ~20+ min and
 pushed the suite past the driver's verify window, so it is split:
 
-- ``test_oracle_parity_smoke`` (default run): a deterministic ~40-query
+- ``test_oracle_parity_smoke`` (default run): a deterministic ~30-query
   subset — every query family this round's optimizations touch plus an
-  every-20th sample of the sorted registry for breadth.
+  every-40th sample of the sorted registry for breadth.
 - ``test_oracle_parity`` (``-m slow``): the remaining queries — the
   exhaustive sweep the closing verification runs; the driver's own
   DuckDB contract sweep independently covers all of them every round.
